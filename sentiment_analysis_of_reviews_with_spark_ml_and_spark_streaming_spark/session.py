@@ -17,7 +17,7 @@ We centralize one builder with the settings that matter at scale:
 from __future__ import annotations
 
 import os
-from contextlib import contextmanager
+from contextlib import contextmanager, suppress
 
 from pyspark.sql import SparkSession
 
@@ -38,30 +38,52 @@ def ensure_worker_imports(spark: SparkSession) -> None:
     sc = spark.sparkContext
     if getattr(sc, "_spark_graft_pyfiles_added", False):
         return
+    import atexit
     import tempfile
     import zipfile
 
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     pkg_name = os.path.basename(pkg_dir)
-    zpath = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_pkg_{os.getpid()}.zip"
-    )
-    if not os.path.exists(zpath):
-        with zipfile.ZipFile(zpath, "w", zipfile.ZIP_STORED) as zf:
-            for root, _dirs, files in os.walk(pkg_dir):
-                for fn in files:
-                    if not fn.endswith(".py"):
-                        continue
-                    full = os.path.join(root, fn)
-                    arc = os.path.join(
-                        pkg_name, os.path.relpath(full, pkg_dir)
-                    )
-                    zf.write(full, arc)
+    # a fresh, uniquely named zip per SparkContext: reusing a zip found
+    # at a fixed path (a recycled PID) would ship another checkout's code
+    fd, zpath = tempfile.mkstemp(prefix="spark_graft_pkg_", suffix=".zip")
+    os.close(fd)
+    atexit.register(_remove_quietly, zpath)
+    with zipfile.ZipFile(zpath, "w", zipfile.ZIP_STORED) as zf:
+        for root, _dirs, files in os.walk(pkg_dir):
+            for fn in files:
+                if not fn.endswith(".py"):
+                    continue
+                full = os.path.join(root, fn)
+                arc = os.path.join(pkg_name, os.path.relpath(full, pkg_dir))
+                zf.write(full, arc)
     sc.addPyFile(zpath)
     sc._spark_graft_pyfiles_added = True
 
 
+def _remove_quietly(path: str) -> None:
+    with suppress(OSError):
+        os.remove(path)
+
+
 @contextmanager
+def _scoped_conf(spark: SparkSession, settings: dict[str, str]):
+    """Set ``settings`` on the session conf for the ``with`` body, then
+    put every key back: its prior explicit value, or unset if it had
+    none (so Spark's own default applies again, not a pinned copy)."""
+    saved = {k: spark.conf.get(k, None) for k in settings}
+    try:
+        for k, v in settings.items():
+            spark.conf.set(k, v)
+        yield spark
+    finally:
+        for k, old in saved.items():
+            if old is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, old)
+
+
 def runtime_bloom_filter(
     spark: SparkSession,
     *,
@@ -86,39 +108,23 @@ def runtime_bloom_filter(
     a bloom FP only admits a non-matching fact row into the exact join,
     which rejects it — the filter trades shuffle volume, never
     correctness (equivalence is asserted in
-    tests/test_plan_hygiene.py::test_runtime_bloom_join_exact).
+    tests/test_plan_hygiene.py::test_runtime_bloom_join_injected_and_exact).
 
     Conf scoping matters because injection happens at OPTIMIZATION
     time, i.e. when an action runs — so the action must execute inside
     this context, not merely have its DataFrame built here. Prior conf
     values are restored on exit.
     """
-    keys = {
+    return _scoped_conf(spark, {
         "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
         "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold": (
             creation_side_threshold
         ),
         "spark.sql.optimizer.runtime.bloomFilter."
         "applicationSideScanSizeThreshold": application_side_scan_threshold,
-    }
-    saved: dict[str, str | None] = {}
-    for k, v in keys.items():
-        try:
-            saved[k] = spark.conf.get(k)
-        except Exception:
-            saved[k] = None
-        spark.conf.set(k, v)
-    try:
-        yield spark
-    finally:
-        for k, old in saved.items():
-            if old is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, old)
+    })
 
 
-@contextmanager
 def rocksdb_state(spark: SparkSession, *, unload_on_commit: bool = False):
     """Scope streaming state onto the RocksDB state store provider.
 
@@ -140,7 +146,7 @@ def rocksdb_state(spark: SparkSession, *, unload_on_commit: bool = False):
     tests/test_streaming_uplift.py::test_rocksdb_state_store_equivalence:
     same windowed aggregation, RocksDB vs default, identical rows).
     """
-    keys = {
+    return _scoped_conf(spark, {
         "spark.sql.streaming.stateStore.providerClass": (
             "org.apache.spark.sql.execution.streaming.state."
             "RocksDBStateStoreProvider"
@@ -149,22 +155,7 @@ def rocksdb_state(spark: SparkSession, *, unload_on_commit: bool = False):
         "spark.sql.streaming.stateStore.rocksdb.unloadOnCommit": (
             "true" if unload_on_commit else "false"
         ),
-    }
-    saved: dict[str, str | None] = {}
-    for k, v in keys.items():
-        try:
-            saved[k] = spark.conf.get(k)
-        except Exception:
-            saved[k] = None
-        spark.conf.set(k, v)
-    try:
-        yield spark
-    finally:
-        for k, old in saved.items():
-            if old is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, old)
+    })
 
 
 def get_spark(

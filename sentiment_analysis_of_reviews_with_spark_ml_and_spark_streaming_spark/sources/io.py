@@ -56,10 +56,7 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     either direction can't silently break every events consumer (the
     round-2 regression; see tests/test_events_vintage.py).
     """
-    try:
-        prev = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong")
-    except Exception:  # noqa: BLE001 - unset returns no default on Spark 4
-        prev = None
+    prev = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     ev = load_table(spark, sf_dir, "events")
     ts_type = ev.schema["ts"].dataType
@@ -204,13 +201,14 @@ def to_pandas_bounded(df: DataFrame, *, limit: int | None = 100_000):
     The reference collected an ENTIRE corpus un-Arrow'd
     (Scalable_Project_ML_Model_Analysis.py:126 + SURVEY.md §4.2 item 1
     — O(corpus) driver memory); here the bound is explicit and Arrow is
-    asserted on so the transfer is columnar.
+    required on so the transfer is columnar.
     """
     spark = df.sparkSession
-    assert (
-        spark.conf.get("spark.sql.execution.arrow.pyspark.enabled", "false")
-        == "true"
-    ), "enable Arrow before driver hand-off (see session.get_spark)"
+    arrow = spark.conf.get("spark.sql.execution.arrow.pyspark.enabled", "false")
+    if arrow != "true":
+        raise RuntimeError(
+            "enable Arrow before driver hand-off (see session.get_spark)"
+        )
     bounded = df.limit(limit) if limit is not None else df
     return bounded.toPandas()
 

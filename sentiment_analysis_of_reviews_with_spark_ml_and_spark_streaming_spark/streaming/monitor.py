@@ -7,8 +7,7 @@ console); Structured Streaming exposes per-batch progress events
 ``StreamingQueryListener`` — the hook a production deployment wires to
 its metrics system. ``capture_progress`` packages that as a context
 manager returning plain dicts; ``stop_all_streams`` is the teardown
-discipline that keeps state-store abort stack traces out of shutdown
-(the BENCH_r03 artifact-truncation lesson, bench.py main()).
+discipline that keeps state-store abort stack traces out of shutdown.
 """
 
 from __future__ import annotations
@@ -51,8 +50,7 @@ def capture_progress(spark: SparkSession):
     (``.progress`` — list of per-batch dicts with ``numInputRows``,
     ``durationMs``, ``stateOperators`` etc.). The listener is always
     removed on exit, so sessions don't accumulate listeners across
-    uses (the same leak class as the Observation-helper bench
-    regression)."""
+    uses."""
     cap = _ProgressCapture()
     spark.streams.addListener(cap)
     try:

@@ -17,8 +17,7 @@ Two comparison modes, both enforced by the sf0.01 sweep:
   driver-shaped contract the repo can express: any divergence the
   driver's hasher could see that is NOT an engine-version difference
   (kind, scale, float sign, repr) fails here first, so a local green
-  + driver red narrows the cause to engine versions (see
-  scripts/env_probe.py).
+  + driver red narrows the cause to engine versions.
 """
 
 from __future__ import annotations

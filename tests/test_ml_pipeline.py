@@ -99,6 +99,16 @@ def test_to_pandas_bounded_arrow(spark):
     pdf = to_pandas_bounded(spark.range(1000).toDF("id"), limit=10)
     assert len(pdf) == 10
 
+    # Arrow off: refused with an exception that `python -O` keeps
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        with pytest.raises(RuntimeError, match="Arrow"):
+            to_pandas_bounded(spark.range(10).toDF("id"))
+    finally:
+        spark.conf.set(key, prev)
+
 
 def test_inspect_weights_most_negative_words(spark):
     from sentiment_analysis_of_reviews_with_spark_ml_and_spark_streaming_spark.ml.pipeline import (
