@@ -54,13 +54,10 @@ REQUIRES_DATA: dict[str, dict[str, str]] = {
         "similarity_pq_codes": _NO_VECTOR,
         "similarity_pq_adc_topk": _NO_VECTOR,
         # LSH.fit probes the first row for the vector dimension —
-        # empty input has no head (r13, the two ml-replay twins;
-        # dedup_minhash_lsh is NOT here: HashingTF stamps numFeatures
-        # into the column's ML attribute metadata, so its LSH.fit
-        # never touches first() and the empty profile just yields
-        # zero pairs)
-        "dedup_minhash_ml_replay": r"head of empty array",
-        "similarity_brp_ml_replay": r"head of empty array",
+        # empty input has no head (dedup_minhash_lsh is NOT here:
+        # HashingTF stamps numFeatures into the column's ML attribute
+        # metadata, so its LSH.fit never touches first() and the empty
+        # profile just yields zero pairs)
         "similarity_ann_lsh": r"head of empty array",
     },
     "single": {

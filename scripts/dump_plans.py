@@ -44,7 +44,6 @@ SHOWCASE = [
     "redacted_documents",
     "mixture_sample_docs",
     "duplicate_span_removal",
-    "dedup_minhash_portable",
     "embedding_quantization",
     "similarity_hyperplane_lsh",
     "cheapest_supplier_per_part",

@@ -57,8 +57,8 @@ def main() -> None:
         "",
         f"`green` = newest fully-green driver certificate "
         f"(CORRECTNESS_r{{N}}.json); {n_green} queries hold one. "
-        "`window` marks the 50 keys seated for THIS round's grading "
-        "(dict order controls what the driver grades).",
+        "`window` marks the first 50 registry keys, the ones the driver "
+        "grades (oracle-backed keys come first, in registration order).",
         "",
         "| query | check | green | summary |",
         "|---|---|---|---|",
@@ -97,7 +97,7 @@ def main() -> None:
         "docs",
         "QUERIES.md",
     )
-    # Preserve the hand-written prose (queue policy, rotation history)
+    # Preserve the hand-written prose (addition notes, registry order)
     # that follows the generated table: everything from the first "## "
     # heading onward survives regeneration.
     prose = ""

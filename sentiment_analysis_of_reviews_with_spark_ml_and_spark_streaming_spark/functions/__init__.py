@@ -1,6 +1,5 @@
 from .text import (  # noqa: F401
     SENTIMENT_LEXICON,
     sentiment_compound,
-    sentiment_score_lexicon_join,
     tokenize_ws,
 )

@@ -5,17 +5,14 @@ closure-serialized ``SentimentIntensityAnalyzer`` call per row
 (``sia_udf`` at Scalable_EDA_Final.py:377-386). That is the canonical
 UDF-as-bottleneck anti-pattern: per-row pickle + GIL-bound Python.
 
-Spark-first re-design, two tiers:
+Spark-first re-design:
 
 1. ``sentiment_compound`` — lexicon as a Catalyst *map literal*;
    token-wise lookup + sum stays entirely in codegen (zero Python).
-   Right answer for lexicons up to a few thousand entries (VADER's
-   ~7.5k fits; we ship a compact built-in lexicon and accept
-   user-supplied ones).
-2. ``sentiment_score_lexicon_join`` — explode tokens and broadcast-join
-   a lexicon *DataFrame*; the scale path for arbitrarily large
-   lexicons (the join is map-side, no fact shuffle; re-agg by doc id
-   is one shuffle with map-side combine).
+   Right answer for small lexicons (we ship a compact built-in one).
+2. ``vader_score`` — the full VADER rule set as native expressions,
+   broadcast-joining a lexicon DataFrame (VADER-scale by default,
+   user-supplied via ``lexicon=``).
 
 Compound normalization follows VADER's published formula
 score/sqrt(score² + 15) → [-1, 1].
@@ -78,60 +75,6 @@ def sentiment_compound(
         lambda acc, tok: acc + F.coalesce(F.element_at(m, tok), F.lit(0.0)),
     )
     return raw / F.sqrt(raw * raw + F.lit(_NORM))
-
-
-MAP_LITERAL_LEXICON_LIMIT = 1000
-
-
-def score_sentiment(
-    df: DataFrame,
-    lexicon: dict[str, float] | None = None,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Size-adaptive sentiment scoring → (id_col, compound).
-
-    Small lexicons (≤ ~1000 entries) inline as a Catalyst map literal —
-    zero joins, pure codegen. Larger ones (VADER-scale, ~7.5k) switch
-    to the broadcast-join path: an inlined map that big bloats the plan
-    and codegen, while a broadcast join stays map-side with one
-    per-doc re-aggregation. Both paths produce identical scores
-    (unit-tested).
-
-    The default lexicon is the full 1,650+-entry VADER-style lexicon
-    (``vader_lexicon.FULL_LEXICON``), which exercises the broadcast-join
-    path; for the complete context-rule treatment (negation, boosters,
-    caps, punctuation) use :func:`vader_score`.
-    """
-    if lexicon is None:
-        from .vader_lexicon import FULL_LEXICON
-
-        lexicon = FULL_LEXICON
-    lex = lexicon
-    # NULL text coalesces to '' so BOTH paths score it 0.0 — without
-    # this the map-literal path returned NULL (aggregate over a null
-    # token array) while the join path returned 0.0 (explode_outer +
-    # coalesce), and the lexicon SIZE silently flipped the semantics.
-    safe_text = F.coalesce(
-        F.col(text_col) if isinstance(text_col, str) else text_col,
-        F.lit(""),
-    )
-    if len(lex) <= MAP_LITERAL_LEXICON_LIMIT:
-        return df.select(
-            F.col(id_col),
-            sentiment_compound(tokenize_ws(safe_text), lex).alias("compound"),
-        )
-    spark = df.sparkSession
-    lex_df = spark.createDataFrame(
-        list(lex.items()), "word string, valence double"
-    )
-    with_tokens = df.select(
-        F.col(id_col), tokenize_ws(safe_text).alias("tokens")
-    )
-    return sentiment_score_lexicon_join(
-        with_tokens, lex_df, id_col=id_col, tokens_col="tokens"
-    )
 
 
 def stem_light(col: Column | str) -> Column:
@@ -364,32 +307,6 @@ def vader_score(
     return agg.select(
         F.col(id_col),
         F.round(raw2 / F.sqrt(raw2 * raw2 + F.lit(ALPHA)), round_digits).alias(
-            "compound"
-        ),
-    )
-
-
-def sentiment_score_lexicon_join(
-    df: DataFrame,
-    lexicon_df: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    tokens_col: str = "tokens",
-) -> DataFrame:
-    """Scale path: explode tokens, broadcast-join lexicon(word,valence),
-    re-aggregate per document. Returns (id_col, compound).
-
-    One shuffle (the per-doc re-agg, map-side combined); the lexicon
-    join itself is broadcast → no fact-side shuffle.
-    """
-    exploded = df.select(id_col, F.explode_outer(F.col(tokens_col)).alias("word"))
-    scored = exploded.join(F.broadcast(lexicon_df), on="word", how="left")
-    agg = scored.groupBy(id_col).agg(
-        F.sum(F.coalesce(F.col("valence"), F.lit(0.0))).alias("raw")
-    )
-    return agg.select(
-        id_col,
-        (F.col("raw") / F.sqrt(F.col("raw") * F.col("raw") + F.lit(_NORM))).alias(
             "compound"
         ),
     )

@@ -358,7 +358,7 @@ def load_vader_lexicon(path: str) -> dict[str, float]:
     """Parse the standard ``vader_lexicon.txt`` TSV
     (``token<TAB>mean_valence<TAB>stddev<TAB>raw_ratings``) so
     deployments with the real NLTK data file get exact parity:
-    ``score_sentiment(df, lexicon=load_vader_lexicon(path))``.
+    ``vader_score(df, lexicon=load_vader_lexicon(path))``.
     """
     lex: dict[str, float] = {}
     with open(path, encoding="utf-8") as fh:

@@ -318,7 +318,7 @@ def minhash_native_candidates(
     ``ngram_jaccard_pairs`` on these candidates as the verify stage.
     Recall for similarity j: 1-(1-j^r)^(K/r) with r=rows_per_band.
     """
-    if num_hashes % rows_per_band:
+    if rows_per_band < 1 or num_hashes % rows_per_band:
         raise ValueError("num_hashes must be a multiple of rows_per_band")
     n_bands = num_hashes // rows_per_band
     # Hash each shingle STRING once; derive the K family members by
@@ -395,276 +395,6 @@ def minhash_native_candidates(
         cand.withColumn("est_jaccard", agree / F.lit(float(num_hashes)))
         .filter(F.col("est_jaccard") >= min_est_jaccard)
         .select("id_a", "id_b", "est_jaccard")
-    )
-
-
-# Carter-Wegman universal-hash modulus for the PORTABLE MinHash
-# family: the Mersenne prime 2^31 - 1. Chosen so a*x + b with
-# a, x < 2^31 stays under 2^62 — exact in the signed 64-bit integer
-# arithmetic BOTH engines (Spark long, DuckDB BIGINT) share, which is
-# what makes the DuckDB oracle able to replay the signatures bit-for-
-# bit. The xxhash64 variant above remains the raw-throughput path; at
-# a 2^31 hash space the per-pair collision term is ~|shingles|²/2^31,
-# negligible at oracle scale and bounded at 100 TB because collisions
-# only ever ADD candidates for the exact-verify stage to reject.
-MINHASH_PORTABLE_PRIME = 2147483647
-
-
-def minhash_portable_coeffs(
-    num_hashes: int, seed: int = 7
-) -> list[tuple[int, int]]:
-    """Deterministic (a, b) Carter-Wegman coefficients.
-
-    Generated by a fixed-constant 64-bit LCG (Knuth MMIX multiplier)
-    seeded with ``seed`` so the Spark operator and the generated
-    DuckDB oracle SQL embed the SAME family without sharing state —
-    both call this function (the SQL generator inlines the values as
-    literals). a ∈ [1, p-1], b ∈ [0, p-1].
-    """
-    state = seed & ((1 << 64) - 1)
-    out = []
-    for _ in range(num_hashes):
-        state = (6364136223846793005 * state + 1442695040888963407) % (1 << 64)
-        a = state % (MINHASH_PORTABLE_PRIME - 1) + 1
-        state = (6364136223846793005 * state + 1442695040888963407) % (1 << 64)
-        b = state % MINHASH_PORTABLE_PRIME
-        out.append((a, b))
-    return out
-
-
-def minhash_portable_candidates(
-    df: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    num_hashes: int = 16,
-    rows_per_band: int = 2,
-    min_est_jaccard: float = 0.2,
-    seed: int = 7,
-) -> DataFrame:
-    """Banded MinHash with an engine-portable hash family (oracle-able).
-
-    Same banded-candidate semantics and plan shape as
-    :func:`minhash_native_candidates` — explode shingles → K hashes →
-    min per hash (ONE map-side-combined shuffle carrying (id, K ints))
-    → band signatures → equi-join on (band, signature) — but the hash
-    family is replayable outside the JVM: base hash is the first 15 hex
-    chars of md5(shingle) (60 bits, the same device the simhash
-    promotion used) reduced mod p = 2^31-1, and member k is
-    ``(a_k * base + b_k) mod p`` with :func:`minhash_portable_coeffs`
-    literals. A DuckDB twin recomputes identical signatures, bands and
-    pairs, turning the whole LSH pipeline — not just its exact-verify
-    stage — into a value-hash-checked query. Band signature is the
-    ':'-joined member values (string equi-join key, no extra hash).
-
-    Returns (id_a, id_b, est_jaccard) with est_jaccard = fraction of
-    agreeing minhashes, filtered to >= min_est_jaccard. Recall for true
-    similarity j: 1-(1-j^r)^(K/r), identical to the native variant.
-    """
-    if num_hashes % rows_per_band:
-        raise ValueError("num_hashes must be a multiple of rows_per_band")
-    n_bands = num_hashes // rows_per_band
-    coeffs = minhash_portable_coeffs(num_hashes, seed)
-    p = MINHASH_PORTABLE_PRIME
-    sh = shingle(df, id_col=id_col, text_col=text_col, n=n)
-    base = sh.select(F.col(id_col), F.explode("shingles").alias("_s")).select(
-        F.col(id_col),
-        (
-            textstats.md5_prefix_long("_s") % p
-        ).alias("_h0"),
-    )
-    sig = base.groupBy(id_col).agg(
-        *[
-            F.min((F.lit(a) * F.col("_h0") + F.lit(b)) % p).alias(f"_m{k}")
-            for k, (a, b) in enumerate(coeffs)
-        ]
-    )
-    bands = sig.select(
-        F.col(id_col),
-        *[F.col(f"_m{k}") for k in range(num_hashes)],
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.concat_ws(
-                            ":",
-                            *[
-                                F.col(f"_m{b * rows_per_band + r}")
-                                for r in range(rows_per_band)
-                            ],
-                        ).alias("sig"),
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select(id_col, *[f"_m{k}" for k in range(num_hashes)], "bk.band", "bk.sig")
-    a_side = bands.select(
-        F.col(id_col).alias("id_a"),
-        *[F.col(f"_m{k}").alias(f"_a{k}") for k in range(num_hashes)],
-        "band",
-        "sig",
-    )
-    b_side = bands.select(
-        F.col(id_col).alias("id_b"),
-        *[F.col(f"_m{k}").alias(f"_b{k}") for k in range(num_hashes)],
-        "band",
-        "sig",
-    )
-    cand = (
-        a_side.join(b_side, on=["band", "sig"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .drop("band", "sig")
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    agree = sum(
-        F.when(F.col(f"_a{k}") == F.col(f"_b{k}"), 1).otherwise(0)
-        for k in range(num_hashes)
-    )
-    return (
-        cand.withColumn(
-            "est_jaccard", agree.cast("double") / F.lit(float(num_hashes))
-        )
-        .filter(F.col("est_jaccard") >= min_est_jaccard)
-        .select("id_a", "id_b", "est_jaccard")
-    )
-
-
-def minhash_ml_replay_candidates(
-    df: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    num_hash_tables: int = 8,
-    rows_per_band: int = 2,
-    seed: int = 42,
-) -> DataFrame:
-    """ml.feature MinHashLSH banding on an oracle-replayable index
-    space — the deterministic twin of :func:`minhash_lsh_candidates`.
-
-    The sibling feeds MinHashLSH through HashingTF (murmur3), so its
-    candidate set is rows-only for the driver. Here the sparse
-    indicator indices are the engine-portable md5-based shingle hash
-    (``md5_prefix_long % MINHASH_ML_PRIME`` — the same device the
-    portable family uses, reduced mod Spark ML's HASH_PRIME so the
-    vector dimension satisfies MinHashLSH's ``inputDim <= prime``
-    requirement), while the signatures follow the REAL
-    ``pyspark.ml.feature.MinHashLSH`` formula. A DuckDB oracle replays
-    the full chain from first principles: the JDK-LCG coefficient
-    draws (functions/jdk_random.py, spec-pinned in
-    tests/test_minhash_spec_values.py) and the published
-    ``min((1 + i) * a + b) mod P`` map become literals in generated
-    SQL — promoting the ml.feature hash chain itself to a
-    value-hash-checked surface (VERDICT r12 #2).
-
-    Banding is r = 2 (``rows_per_band`` signatures per band, the
-    :func:`minhash_portable_candidates` shape): single-signature
-    banding (approxSimilarityJoin's r = 1) fires at probability j per
-    table even for unrelated pairs, which measured 82k candidate
-    pairs / 13 s at sf0.1 — r = 2 drops incidental collisions to j²
-    per band while every signature value still flows through the
-    band keys AND the n_agree surface, so the certification power is
-    identical. Returns (id_a, id_b, n_agree) with n_agree = number of
-    agreeing signature positions — an integer-only surface (no float
-    kinds for the driver's hasher).
-
-    r15 (guide §4.1): the sparse-vector assembly UDF +
-    ``MinHashLSH.fit/transform`` are gone — the signatures come from
-    the SAME published formula the model applies,
-    ``min over indices i of ((1 + i) · aₜ + bₜ) mod HASH_PRIME`` with
-    the seeded JDK-LCG (aₜ, bₜ) draws from functions/jdk_random.py
-    (spec-pinned against live ml.feature output in
-    tests/test_minhash_spec_values.py), evaluated as native
-    expressions in the index aggregation itself. min over duplicate
-    indices == min over the distinct set, and the arithmetic is exact
-    in longs (i < HASH_PRIME < 2³¹, a < 2³¹ ⇒ products < 2⁶²), so the
-    values are identical to the model's double-carried integers.
-    """
-    from ..functions.jdk_random import (
-        MINHASH_ML_PRIME,
-        minhash_ml_coefficients,
-    )
-
-    p = MINHASH_ML_PRIME
-    coeffs = minhash_ml_coefficients(seed, num_hash_tables)
-    sh = shingle(df, id_col=id_col, text_col=text_col, n=n)
-    exploded = (
-        sh.select(F.col(id_col), F.explode("shingles").alias("_s"))
-        .filter(F.col("_s").isNotNull())
-        .select(
-            F.col(id_col), (textstats.md5_prefix_long("_s") % p).alias("_i")
-        )
-    )
-    # one groupBy yields every signature; pinned because the band
-    # self-join consumes it twice (the old path cached the featurized
-    # frame but re-ran the model transform — a per-row JVM UDF over
-    # sparse vectors — once per side)
-    sig = (
-        exploded.groupBy(id_col)
-        .agg(
-            *[
-                F.min(
-                    ((F.col("_i") + F.lit(1)) * F.lit(a) + F.lit(b))
-                    % F.lit(p)
-                ).alias(f"_m{t}")
-                for t, (a, b) in enumerate(coeffs)
-            ]
-        )
-        .localCheckpoint(eager=True)
-    )
-    if num_hash_tables % rows_per_band:
-        raise ValueError("num_hash_tables must be a multiple of rows_per_band")
-    n_bands = num_hash_tables // rows_per_band
-    bands = sig.select(
-        F.col(id_col),
-        *[F.col(f"_m{t}") for t in range(num_hash_tables)],
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("t"),
-                        F.concat_ws(
-                            ":",
-                            *[
-                                F.col(f"_m{b * rows_per_band + r}")
-                                for r in range(rows_per_band)
-                            ],
-                        ).alias("v"),
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select(
-        id_col, *[f"_m{t}" for t in range(num_hash_tables)], "bk.t", "bk.v"
-    )
-    a_side = bands.select(
-        F.col(id_col).alias("id_a"),
-        *[F.col(f"_m{t}").alias(f"_a{t}") for t in range(num_hash_tables)],
-        "t",
-        "v",
-    )
-    b_side = bands.select(
-        F.col(id_col).alias("id_b"),
-        *[F.col(f"_m{t}").alias(f"_b{t}") for t in range(num_hash_tables)],
-        "t",
-        "v",
-    )
-    cand = (
-        a_side.join(b_side, on=["t", "v"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .drop("t", "v")
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    agree = sum(
-        F.when(F.col(f"_a{t}") == F.col(f"_b{t}"), 1).otherwise(0)
-        for t in range(num_hash_tables)
-    )
-    return cand.select(
-        "id_a", "id_b", agree.cast("long").alias("n_agree")
     )
 
 

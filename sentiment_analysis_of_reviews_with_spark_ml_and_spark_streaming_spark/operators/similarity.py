@@ -337,8 +337,7 @@ def hyperplane_coeffs(
 ) -> list[list[float]]:
     """Deterministic pseudo-random hyperplanes in [-1, 1), derived from
     md5 so the Spark operator and a generated SQL oracle embed the SAME
-    planes as literals (the device the portable-MinHash family uses for
-    its coefficients). repr(float) round-trips, so literal embedding is
+    planes as literals. repr(float) round-trips, so literal embedding is
     bit-exact in both engines."""
     import hashlib
 
@@ -363,9 +362,8 @@ def ann_hyperplane_deterministic(
     seed: int = 11,
 ) -> DataFrame:
     """Random-hyperplane (sign) LSH ANN with an engine-portable plane
-    family — the ANN-tier twin of the portable-MinHash promotion: the
-    whole candidate-generation stage (not just a brute-force oracle) is
-    replayable in SQL.
+    family: the whole candidate-generation stage (not just a
+    brute-force oracle) is replayable in SQL.
 
     Bucket bit p = [v·h_p ≥ 0]; the dot product is an explicit
     left-associated sum (zip_with + left fold), matching the
@@ -523,93 +521,6 @@ def ann_lsh_topk(
         pairs.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "rank", F.round("euclidean_dist", 4).alias("euclidean_dist"))
-    )
-
-
-def brp_ml_replay_collisions(
-    corpus: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    bucket_length: float = 0.1,
-    num_hash_tables: int = 4,
-    seed: int = 42,
-    query_max_id: int = 10,
-) -> DataFrame:
-    """BucketedRandomProjectionLSH bucket collisions with an
-    oracle-replayable hash chain — the deterministic twin of
-    :func:`ann_lsh_topk` (VERDICT r12 #2).
-
-    The REAL ``pyspark.ml.feature.BucketedRandomProjectionLSH`` model
-    hashes every vector to ``floor(dot(x, v_t) / bucketLength)`` per
-    table; a DuckDB oracle replays the seeded Gaussian unit-vector
-    draws from first principles (JDK 48-bit LCG + Marsaglia polar,
-    functions/jdk_random.py, spec-pinned in
-    tests/test_minhash_spec_values.py) and recomputes the same floors
-    with the unit-vector components inlined as SQL literals. The dot
-    product is a left-associated sequential double sum on both
-    engines (netlib ddot's unrolled loop is left-associated, so f2j
-    BLAS == a left-deep SQL '+' chain bit-for-bit); floor()
-    quantization makes the surface integer-only.
-
-    Returns (query_id, neighbor_id, n_shared_tables) for every
-    corpus vector colliding with a query (id < query_max_id) in at
-    least one hash table — the exact candidate set ann_lsh_topk's
-    approxSimilarityJoin would rank. Collision volume is bounded by
-    bucket occupancy x num_hash_tables per query, never O(n^2).
-    """
-    from pyspark.ml.feature import BucketedRandomProjectionLSH
-    from pyspark.ml.functions import array_to_vector, vector_to_array
-
-    c = corpus.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).alias("_id"),
-        array_to_vector(F.col(vec_col).cast("array<double>")).alias(
-            "features"
-        ),
-    )
-    model = BucketedRandomProjectionLSH(
-        inputCol="features",
-        outputCol="hashes",
-        bucketLength=bucket_length,
-        numHashTables=num_hash_tables,
-        seed=seed,
-    ).fit(c)
-    # bucket ids are small integers carried in doubles — exact cast
-    hashed = model.transform(c).select(
-        "_id",
-        *[
-            vector_to_array(F.col("hashes")[t])[0]
-            .cast("long")
-            .alias(f"_b{t}")
-            for t in range(num_hash_tables)
-        ],
-    )
-    buckets = hashed.select(
-        "_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(t).alias("t"), F.col(f"_b{t}").alias("bucket")
-                    )
-                    for t in range(num_hash_tables)
-                ]
-            )
-        ).alias("tb"),
-    ).select("_id", "tb.t", "tb.bucket")
-    q = buckets.filter(F.col("_id") < query_max_id).select(
-        F.col("_id").alias("query_id"), "t", "bucket"
-    )
-    return (
-        q.join(
-            buckets.select(
-                F.col("_id").alias("neighbor_id"), "t", "bucket"
-            ),
-            on=["t", "bucket"],
-        )
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.count("*").alias("n_shared_tables"))
     )
 
 

@@ -82,7 +82,7 @@ def c4_line_stats(
     NULL text coalesces to '' (r11 review finding): NULL poisoned
     every stat INCLUDING keep_doc, so the doc vanished from BOTH the
     keep and the reject partitions of any downstream filter — the same
-    guard score_sentiment/vader_score already apply.
+    guard vader_score already applies.
     """
     c = F.coalesce(F.col(text_col), F.lit(""))
     # \r?\n so CRLF text doesn't leave \r on every line; the terminal-

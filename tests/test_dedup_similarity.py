@@ -76,37 +76,12 @@ def test_minhash_native_recall_and_estimate(spark):
     assert abs(approx[(1, 2)] - exact[(1, 2)]) < 0.3
 
 
-def test_minhash_portable_recall_and_estimate(spark):
-    exact = {
-        (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in dedup.ngram_jaccard_pairs(_corpus(spark), threshold=0.5).collect()
-    }
-    approx = {
-        (r["id_a"], r["id_b"]): r["est_jaccard"]
-        for r in dedup.minhash_portable_candidates(
-            _corpus(spark), num_hashes=16, rows_per_band=2, min_est_jaccard=0.3
-        ).collect()
-    }
-    assert set(exact) <= set(approx)  # full recall on this corpus
-    assert approx[(1, 3)] == 1.0  # identical docs: every minhash agrees
-    assert abs(approx[(1, 2)] - exact[(1, 2)]) < 0.35
-
-
-def test_minhash_portable_coeffs_deterministic_and_in_range():
-    p = dedup.MINHASH_PORTABLE_PRIME
-    c1 = dedup.minhash_portable_coeffs(16, seed=7)
-    c2 = dedup.minhash_portable_coeffs(16, seed=7)
-    assert c1 == c2 and len(set(c1)) == 16
-    for a, b in c1:
-        assert 1 <= a < p and 0 <= b < p
-    assert dedup.minhash_portable_coeffs(16, seed=8) != c1
-
-
-def test_minhash_portable_rejects_bad_banding(spark):
+@pytest.mark.parametrize("rows_per_band", [3, 0])
+def test_minhash_native_rejects_bad_banding(spark, rows_per_band):
     # validation fires before any job runs
     with pytest.raises(ValueError):
-        dedup.minhash_portable_candidates(
-            _corpus(spark), num_hashes=16, rows_per_band=3
+        dedup.minhash_native_candidates(
+            _corpus(spark), num_hashes=16, rows_per_band=rows_per_band
         )
 
 

@@ -197,68 +197,6 @@ def test_fuzz_window_topk(spark, tmp_path_factory, rows):
     con.close()
 
 
-texts_strategy = st.lists(
-    st.text(
-        alphabet=st.sampled_from(list("abc XY1#.")),
-        min_size=0,
-        max_size=60,
-    ),
-    min_size=1,
-    max_size=12,
-)
-
-
-@settings(**_SETTINGS)
-@given(texts=texts_strategy)
-def test_fuzz_minhash_portable_hash_family(spark, tmp_path_factory, texts):
-    """The portable MinHash signature must be replayed bit-for-bit by
-    an independent Python recomputation (md5 base, Carter-Wegman mod
-    2^31-1) on adversarial short/empty/punctuated docs."""
-    import hashlib
-
-    from sentiment_analysis_of_reviews_with_spark_ml_and_spark_streaming_spark.operators import (
-        dedup,
-    )
-
-    rows = [(i, t) for i, t in enumerate(texts)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    sh = dedup.shingle(df, n=3)
-    p = dedup.MINHASH_PORTABLE_PRIME
-    coeffs = dedup.minhash_portable_coeffs(4, seed=7)
-    # independent Python replay from collected shingles
-    got = {}
-    for r in sh.collect():
-        mins = []
-        for a, b in coeffs:
-            vals = []
-            for s in r["shingles"]:
-                h0 = int(hashlib.md5(s.encode()).hexdigest()[:15], 16) % p
-                vals.append((a * h0 + b) % p)
-            mins.append(min(vals))
-        got[r["doc_id"]] = mins
-    # engine signatures: the same expressions minhash_portable_candidates
-    # builds its sig frame from
-    base = sh.select(
-        F.col("doc_id"), F.explode("shingles").alias("_s")
-    ).select(
-        "doc_id",
-        (
-            F.conv(F.substring(F.md5("_s"), 1, 15), 16, 10).cast("long") % p
-        ).alias("_h0"),
-    )
-    sig = base.groupBy("doc_id").agg(
-        *[
-            F.min((F.lit(a) * F.col("_h0") + F.lit(b)) % p).alias(f"_m{k}")
-            for k, (a, b) in enumerate(coeffs)
-        ]
-    )
-    eng = {
-        row["doc_id"]: [row[f"_m{k}"] for k in range(4)]
-        for row in sig.collect()
-    }
-    assert eng == got
-
-
 @settings(**_SETTINGS)
 @given(
     vecs=st.lists(

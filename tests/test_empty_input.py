@@ -333,8 +333,6 @@ def blank_docs_dir(tmp_path_factory):
 @pytest.mark.parametrize("name", [
     "dedup_minhash_lsh",
     "dedup_minhash_native",
-    "dedup_minhash_portable",
-    "dedup_minhash_ml_replay",
 ])
 def test_minhash_twins_drop_blank_docs_like_the_engine(
     spark, name, blank_docs_dir

@@ -1,6 +1,7 @@
-"""r15 rewrite certification: the native minhash_lsh_candidates /
-minhash_ml_replay_candidates must equal the ml.feature chains they
-replaced, value-for-value, on a corpus with real near-duplicates.
+"""r15 rewrite certification: the native minhash_lsh_candidates and
+the md5-index MinHashLSH signature formula must equal the ml.feature
+chains they replaced, value-for-value, on a corpus with real
+near-duplicates.
 
 The r15 optimization removed the last UDF-style boundaries in the
 dedup hot paths (HashingTF + MinHashLSH.fit/transform/
@@ -232,17 +233,3 @@ def test_native_replay_signatures_equal_model(spark, docs, tables, seed):
         ).collect()
     )
     assert got == want
-
-
-def test_replay_candidates_unchanged_surface(spark, docs):
-    """End-to-end: the rewritten minhash_ml_replay_candidates keeps
-    its (id_a, id_b, n_agree) surface and pairs the exact dups."""
-    out = dedup.minhash_ml_replay_candidates(docs).collect()
-    assert out, "expected candidates on a corpus with exact duplicates"
-    pairs = {(r["id_a"], r["id_b"]): r["n_agree"] for r in out}
-    # exact duplicates must band together in every table
-    assert pairs.get((1, 3)) == 8
-    assert pairs.get((11, 12)) == 8
-    for (a, b), n in pairs.items():
-        assert a < b
-        assert 1 <= n <= 8

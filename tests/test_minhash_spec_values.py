@@ -1,16 +1,13 @@
 """Absolute-value certification of ml.feature.MinHashLSH signatures.
 
-`dedup_minhash_lsh` (the ml.feature 100 TB dedup path) is rows-only
-for the driver: its hash family is generated from Spark ML's seeded
-RNG, which no DuckDB oracle can replay without coupling the GRADED
-surface to Spark internals — the exact engine-version fragility the
-r10/r11 drift forensics taught us to keep out of driver certificates.
-The portable twin (`dedup_minhash_portable`) certifies the banded
-plan shape with an engine-portable family instead.
+`dedup_minhash_lsh` (the ml.feature 100 TB dedup path) draws its
+hash family from Spark ML's seeded RNG. Its DuckDB oracle
+(`SQL_DEDUP_MINHASH_LSH`) replays that family from first principles,
+and `similarity_ann_lsh`'s oracle does the same for the BRP unit
+vectors; both lean on the replay math pinned here.
 
-What was still missing (VERDICT r11 stretch #8): a pinned,
-independent certification of the ml.feature signature math itself.
-This test replays it from first principles — a pure-Python
+This file is a pinned, independent certification of the ml.feature
+signature math itself, replayed from first principles: a pure-Python
 java.util.Random (the 48-bit LCG of the JDK spec) reproduces the
 model's seeded coefficient draws, and the published MinHash map
 h_{a,b}(x) = min over nonzero indices i of ((1+i)·a + b) mod P with
@@ -291,11 +288,11 @@ def test_hashingtf_counts_match_replay(spark):
 # --- package replay module (functions/jdk_random.py) ---------------------
 #
 # Round 13 promoted the replay math INTO the package so generated
-# DuckDB oracles (dedup_minhash_ml_replay / similarity_brp_ml_replay)
-# can inline the coefficient/unit-vector draws as SQL literals. This
-# file keeps its own independent implementation; the tests below pin
-# the package module against it so an accidental edit to either side
-# fails here before it shifts a driver-graded surface.
+# DuckDB oracles (dedup_minhash_lsh / similarity_ann_lsh) can inline
+# the coefficient/unit-vector draws as SQL literals. This file keeps
+# its own independent implementation; the tests below pin the package
+# module against it so an accidental edit to either side fails here
+# before it shifts a driver-graded surface.
 
 
 def test_package_minhash_coefficients_match_independent_replay():

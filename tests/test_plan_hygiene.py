@@ -56,13 +56,6 @@ SKIP = {
     # r7: blocked ALS fits at plan-build time (covered by
     # tests/test_recommend.py)
     "als_recommendations",
-    # r13: the ml.feature replay twins also fit LSH models at
-    # plan-build time; their sparse-vector assembly UDF is
-    # certification scaffolding, not the 100 TB path (that remains
-    # dedup_minhash_lsh / minhash_native / ann_lsh_topk) — both are
-    # oracle-backed, which is the stronger check
-    "dedup_minhash_ml_replay",
-    "similarity_brp_ml_replay",
 }
 
 

@@ -1,91 +1,32 @@
-"""Both sentiment paths (map-literal codegen vs broadcast-join) must
-produce identical scores; the dispatcher must pick by lexicon size."""
+"""Sentiment scoring: the map-literal compound formula and vader_score's
+NULL-text handling."""
 
 from __future__ import annotations
 
 import math
 
-import pytest
-from pyspark.sql import functions as F
-
 from sentiment_analysis_of_reviews_with_spark_ml_and_spark_streaming_spark.functions.text import (
-    MAP_LITERAL_LEXICON_LIMIT,
-    SENTIMENT_LEXICON,
-    score_sentiment,
     sentiment_compound,
-    sentiment_score_lexicon_join,
     tokenize_ws,
+    vader_score,
 )
 
 
-@pytest.fixture(scope="module")
-def docs(spark):
-    rows = [
-        (1, "great great food but slow service"),
-        (2, "terrible awful worst experience"),
-        (3, "completely neutral words only here"),
-        (4, ""),
-    ]
-    return spark.createDataFrame(rows, "doc_id long, text string")
-
-
-def test_map_and_join_paths_agree(spark, docs):
-    small = score_sentiment(docs, SENTIMENT_LEXICON)
-    lex_df = spark.createDataFrame(
-        list(SENTIMENT_LEXICON.items()), "word string, valence double"
-    )
-    joined = sentiment_score_lexicon_join(
-        docs.select("doc_id", tokenize_ws("text").alias("tokens")), lex_df
-    )
-    a = {r["doc_id"]: round(r["compound"], 9) for r in small.collect()}
-    b = {r["doc_id"]: round(r["compound"], 9) for r in joined.collect()}
-    assert a == b
-    assert a[1] > 0 > a[2]
-    assert a[3] == 0.0 and a[4] == 0.0
-
-
-def test_dispatcher_switches_to_join_for_big_lexicon(spark, docs):
-    big = dict(SENTIMENT_LEXICON)
-    big.update({f"filler{i}": 0.1 for i in range(MAP_LITERAL_LEXICON_LIMIT + 1)})
-    out = score_sentiment(docs, big)
-    # join path emits an aggregate over an explode — plan contains a join
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Join" in plan
-    scores = {r["doc_id"]: r["compound"] for r in out.collect()}
-    # filler words don't appear in the docs; scores match the small path
-    base = {
-        r["doc_id"]: r["compound"]
-        for r in score_sentiment(docs, SENTIMENT_LEXICON).collect()
-    }
-    for k in base:
-        assert math.isclose(scores[k], base[k], rel_tol=1e-12, abs_tol=1e-12)
-
-
-def test_vader_formula(spark, docs):
+def test_vader_formula(spark):
     # single 'great' (+3.1): compound = 3.1/sqrt(3.1^2+15)
     df = spark.createDataFrame([(1, "great")], "doc_id long, text string")
-    out = score_sentiment(df).collect()[0]["compound"]
-    assert math.isclose(out, 3.1 / math.sqrt(3.1**2 + 15), rel_tol=1e-9)
+    out = df.select(sentiment_compound(tokenize_ws("text")).alias("c"))
+    assert math.isclose(
+        out.collect()[0]["c"], 3.1 / math.sqrt(3.1**2 + 15), rel_tol=1e-9
+    )
 
 
 def test_null_text_scores_zero_not_dropped(spark):
-    """NULL text must neither vanish from vader_score's output
-    (posexplode of a null array emits no rows) nor flip between NULL
-    and 0.0 across score_sentiment's two lexicon paths."""
-    from sentiment_analysis_of_reviews_with_spark_ml_and_spark_streaming_spark.functions.text import (
-        score_sentiment,
-        vader_score,
-    )
-
+    """NULL text must not vanish from vader_score's output (posexplode
+    of a null array emits no rows); it scores 0.0."""
     df = spark.createDataFrame(
         [(1, "good great"), (2, None)], "doc_id long, text string"
     )
     v = {r["doc_id"]: r["compound"] for r in vader_score(df).collect()}
     assert set(v) == {1, 2}, "null-text doc must not vanish"
     assert v[2] == 0.0
-    small = {"good": 1.9, "great": 3.1}
-    s_map = {r["doc_id"]: r["compound"]
-             for r in score_sentiment(df, small).collect()}
-    s_join = {r["doc_id"]: r["compound"]
-              for r in score_sentiment(df).collect()}
-    assert s_map[2] == 0.0 and s_join[2] == 0.0

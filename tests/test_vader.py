@@ -117,8 +117,8 @@ def test_vader_batch_consistency(spark):
 
 
 def test_full_lexicon_exercises_broadcast_join_path():
-    """>1000 entries is the documented threshold where score_sentiment
-    switches off the map-literal path; the VADER lexicon must clear it."""
+    """vader_score broadcast-joins its lexicon instead of inlining a
+    map literal; the default VADER lexicon must be VADER-scale."""
     assert len(VL.FULL_LEXICON) > 1000
     assert all(-4.0 <= v <= 4.0 for v in VL.FULL_LEXICON.values())
     # booster/negator words must not shadow lexicon gates trivially
